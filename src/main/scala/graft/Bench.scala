@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Benchmark entrypoint. Prints ONE JSON line with per-query times.
   *
@@ -45,28 +44,9 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val runs = math.max(1, sys.env.getOrElse("SPARK_GRAFT_BENCH_RUNS", "3").toInt)
     val diag = sys.env.get("SPARK_GRAFT_BENCH_DIAG").contains("1")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC") // NTZ casts (profile_cols_approx) must match Verify
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true") // events.ts is TIMESTAMP(NANOS)
-      // Janino class cache sized to the full query inventory (static conf,
-      // takes effect because this is the JVM's first session): the default
-      // 100 entries thrash under a 200+-plan interleaved sweep — every
-      // query re-Janino-compiles every round, and once the JIT code cache
-      // saturates those recompiles (and the regenerated methods' re-JIT)
-      // run de-optimized — the r15 pipe_jsonata 12.6 s mechanism. Re-sized
-      // r17: the 213-query sweep now generates ~3.7k distinct fragments
-      // (diag-measured: a 2000-entry cache recompiled ~3.1k fragments in
-      // round 2 — full eviction thrash, a broad +5-15% tax on every
-      // round); 8000 leaves headroom for round-2 growth.
-      .config("spark.sql.codegen.cache.maxEntries",
-        sys.env.getOrElse("SPARK_GRAFT_CODEGEN_CACHE", "8000"))
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.builder().getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     // session/codegen warmup so the first measured query doesn't absorb
     // JVM + Catalyst initialization
@@ -87,18 +67,28 @@ object Bench {
       // masquerade as a speedup) — it lands in the `failed` field instead.
       val cgm = org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME
       val (c0, cc0) = if (diag) (cgm.getCount, codeCacheUsedMb()) else (0L, 0.0)
+      // construct = the query function call (plan construction incl. any
+      // eager control-plane jobs); exec = the action
+      var t1 = 0L
       try {
-        fn(spark, sfDir).queryExecution.toRdd.count()
+        val df = fn(spark, sfDir)
+        t1 = System.nanoTime()
+        df.queryExecution.toRdd.count()
         samples(name) = samples(name) :+ (System.nanoTime() - t0) / 1e9
       } catch {
         case e: Throwable =>
           failed += name
           System.err.println(s"[bench] $name FAILED (round $round): $e")
       }
-      if (diag) System.err.println(
-        f"[diag] round=$round name=$name sec=${(System.nanoTime() - t0) / 1e9}%.3f " +
-          f"janinoCompiles=${cgm.getCount - c0} codeCacheMB=${codeCacheUsedMb()}%.1f " +
-          f"(was ${cc0}%.1f)")
+      if (diag) {
+        val t2 = System.nanoTime()
+        if (t1 == 0L) t1 = t2 // construct itself failed
+        System.err.println(
+          f"[diag] round=$round name=$name sec=${(t2 - t0) / 1e9}%.3f " +
+            f"construct=${(t1 - t0) / 1e9}%.3f exec=${(t2 - t1) / 1e9}%.3f " +
+            f"janinoCompiles=${cgm.getCount - c0} codeCacheMB=${codeCacheUsedMb()}%.1f " +
+            f"(was ${cc0}%.1f)")
+      }
     }
 
     // a query with zero successful runs is excluded from every total and

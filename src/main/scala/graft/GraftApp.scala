@@ -134,16 +134,17 @@ object GraftApp {
   def main(args: Array[String]): Unit = {
     val app = parseArgs(args)
     val cfg = app.cfg
-    // spark-submit injects spark.master; direct runMain gets local[*]
-    val master = sys.props.get("spark.master")
-      .orElse(sys.env.get("SPARK_MASTER")).getOrElse("local[*]")
-    val spark = SparkSession.builder()
-      .appName("graft-mqtt-bridge")
-      .master(master)
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // an existing session (a shell, the tests) is reused untouched:
+    // getOrCreate would write this builder's runtime conf onto it
+    val spark = SparkSession.getActiveSession.orElse(SparkSession.getDefaultSession)
+      .getOrElse {
+        // spark-submit injects spark.master; direct runMain gets local[cpus]
+        val b = GraftSession.builder().appName("graft-mqtt-bridge")
+        sys.props.get("spark.master").orElse(sys.env.get("SPARK_MASTER")).foreach(b.master)
+        val s = b.getOrCreate()
+        s.sparkContext.setLogLevel("WARN")
+        s
+      }
 
     val cfgResolved =
       if (cfg.inferSchema && cfg.payloadSchema.isEmpty) {
@@ -192,8 +193,8 @@ object GraftApp {
       stats.report()
       query.stop()
       spark.streams.removeListener(stats)
-      // no spark.stop(): the CLI JVM exits; under getOrCreate the session
-      // may be shared (tests), and stopping it would break the sharer
+      // no spark.stop(): the CLI JVM exits, and a reused session belongs
+      // to its sharer (tests)
     } else {
       // reference Logger: print + reset every interval (src/Logger.js:6,17-21)
       val timer = new java.util.Timer("graft-stats", true)

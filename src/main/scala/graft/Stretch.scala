@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Scale-stretch harness: materialize FACTOR× copies of the tables behind
@@ -24,17 +24,7 @@ object Stretch {
     val factor = args.lift(2).map(_.toInt).getOrElse(10)
     // optional 4th+ args: measure these queries instead of the default set
     val queries = if (args.length > 3) args.drop(3).toSeq else Queries
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // UTC like Bench/Verify/Explain: Tables.events' TIMESTAMP_NTZ
-      // branch casts through the session TZ, so a non-UTC host would
-      // otherwise materialize shifted instants into the stretch tables
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.builder().getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     spark.range(100000).selectExpr("sum(id * 2)").collect()
 

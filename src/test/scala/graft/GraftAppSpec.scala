@@ -20,6 +20,8 @@ class GraftAppSpec extends SparkTestBase {
         Thread.sleep(400) // let them reach the driver buffer before --once drains
       })
       publisher.start()
+      val sessionConf = Seq("spark.sql.shuffle.partitions", "spark.sql.session.timeZone")
+      val before = sessionConf.map(spark.conf.get)
       GraftApp.main(Array(
         "--mqtt-url", broker.url,
         "--topic", "iot/#",
@@ -30,6 +32,8 @@ class GraftAppSpec extends SparkTestBase {
         "--out-dir", outDir,
         "--once"))
       publisher.join()
+      // main reuses the shared session untouched (no conf written onto it)
+      assert(sessionConf.map(spark.conf.get) == before)
 
       val out = spark.read.parquet(outDir)
       assert(out.count() == 2)

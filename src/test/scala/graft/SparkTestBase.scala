@@ -8,11 +8,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * session; sbt forks a single test JVM so suites reuse it).
   */
 trait SparkTestBase extends AnyFunSuite with BeforeAndAfterAll {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
+  lazy val spark: SparkSession = GraftSession.builder(cpus = 4)
     // static conf: saveAsTable output (BucketingSpec) goes to tmp, not cwd
     .config("spark.sql.warehouse.dir",
       java.nio.file.Files.createTempDirectory("graft_warehouse").toString)
